@@ -884,6 +884,8 @@ def build_parser() -> argparse.ArgumentParser:
     lay.add_argument(
         "--kind",
         default="all",
+        # the keys of plans/star_layout.KINDS (kept literal here so
+        # parsing does not import pyspark)
         choices=["star", "zorder", "lineitem", "q1-rollup", "all"],
         help="which layout family to ensure/refresh",
     )
@@ -895,8 +897,9 @@ def _cmd_layout(spark, args) -> int:
     prints every substitution-capable layout the catalog discovers (with
     per-use freshness verdicts); `layout ensure --data DIR` builds (or
     verifies) them; `layout refresh --data DIR` folds append-only deltas
-    (plans/star_layout.refresh_*; falls back to rebuild on any
-    non-append change)."""
+    (plans/star_layout.refresh; falls back to rebuild on any non-append
+    change). Kinds come from the derived-relation registry
+    (star_layout.KINDS)."""
     from .plans import layout_catalog, star_layout
 
     act = args.layout_action
@@ -916,28 +919,10 @@ def _cmd_layout(spark, args) -> int:
     if not args.data:
         print(f"layout {act}: pass --data DIR", file=sys.stderr)
         return 2
-    kinds = (
-        ["star", "zorder", "lineitem", "q1-rollup"]
-        if args.kind == "all"
-        else [args.kind]
-    )
-    fns = {
-        "ensure": {
-            "star": star_layout.ensure_star_layout,
-            "zorder": star_layout.ensure_zorder_layout,
-            "lineitem": star_layout.ensure_lineitem_layout,
-            "q1-rollup": star_layout.ensure_q1_rollup,
-        },
-        "refresh": {
-            "star": star_layout.refresh_star_layout,
-            "zorder": star_layout.refresh_zorder_layout,
-            "lineitem": star_layout.refresh_lineitem_layout,
-            "q1-rollup": star_layout.refresh_q1_rollup,
-        },
-    }[act]
+    kinds = list(star_layout.KINDS) if args.kind == "all" else [args.kind]
+    step = star_layout.ensure_kind if act == "ensure" else star_layout.refresh_kind
     for kind in kinds:
-        out = fns[kind](spark, args.data)
-        print(f"{kind}: {out}")
+        print(f"{kind}: {step(kind, spark, args.data)}")
     return 0
 
 

@@ -12,8 +12,18 @@ for the raw scan of the relation it covers — in USER-AUTHORED models
 (SQL-string or Python) resolved through the Project registry, not just
 in the engine's own queries.
 
-The substitution contract (written by plans/star_layout.py at build
-time, fields in the ``_dbt_layout_spec.json`` sidecar):
+There is ONE derived-relation mechanism (plans/star_layout.py): every
+layout and rollup is a ``DerivedRelation`` spec with one
+ensure/route/refresh implementation and one sidecar format. This module
+is its second consumer — it reads the same sidecars from the warehouse
+instead of from a spec in hand, and re-registers a table whose catalog
+entry died with its session through the same verify-and-register step
+(``star_layout._register``: ``CLUSTERED BY`` only when the spec has a
+bucket column), so bucketed and plain layouts route alike.
+
+The substitution contract (written by ``star_layout.ensure`` for specs
+with ``substitutes=True``; fields in the ``_dbt_layout_spec.json``
+sidecar):
 
 - ``covers``: the logical source relation this layout can substitute.
 - ``covers_paths``: the covered relation's file paths — a candidate
@@ -23,13 +33,12 @@ time, fields in the ``_dbt_layout_spec.json`` sidecar):
 - ``source_paths`` + ``source_fp``: ALL derivation inputs and their
   fingerprint at build time (plans/fingerprint.py). Routing recomputes
   the fingerprint per use — metadata-only, pure os.stat — and refuses a
-  stale layout, the same guard the rollup router and
-  ``maybe_star_layout`` apply.
+  stale layout, the same guard ``star_layout.route`` applies.
 - ``source_columns``: the covered relation's exact column list.
   ``SELECT source_columns FROM layout`` is row- and schema-identical to
   the raw scan BY BUILD CONTRACT (identity-plus-enrichment frames;
   row-count parity machine-checked at build for derived layouts —
-  star_layout.ensure_star_layout), so the swap is sound in ANY plan:
+  ``row_parity`` specs), so the swap is sound in ANY plan:
   ``SELECT *``, joins, aggregates, everything.
 - ``route_gate_paths``: files whose current on-disk size must reach
   ``ROUTE_MIN_FACT_BYTES`` for the group to route (the star group's
@@ -43,7 +52,7 @@ planner pays to enumerate splits. The payoff is the 100 TB fact never
 shuffling: a user model joining orders⋈customer on the bucket key gets
 two co-bucketed scans and an exchange-free join without knowing the
 layout exists. Fallback is silent and NEVER builds — exactly the
-``maybe_star_layout`` contract.
+``star_layout.route`` contract.
 
 Reference parity: dbt users get this by hand — they point ``ref()`` at
 a pre-built mart. Here the engine does the pointing, with a freshness
@@ -57,7 +66,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from . import star_layout
-from .star_layout import LAYOUT_SIDECAR, _register_bucketed
+from .star_layout import LAYOUT_SIDECAR
 
 #: Name of the layout table the last route_source() hit resolved to, or
 #: None (observability + tests; mirrors star_layout.last_route_used).
@@ -129,8 +138,10 @@ def discover_layouts(spark: SparkSession) -> list[tuple[str, dict]]:
 
 def _fresh_and_routable(spark: SparkSession, spec: dict) -> bool:
     """Per-use verification: sources unchanged since build (fingerprint),
-    group fact big enough to win (gate), files complete (_SUCCESS)."""
-    from .fingerprint import dir_is_complete, files_fingerprint
+    group fact big enough to win (gate), then star_layout's shared
+    verify-and-register step (files complete, re-registered bucketed or
+    plain as the spec says)."""
+    from .fingerprint import files_fingerprint
 
     if spec.get("pending"):
         return False  # mid-refresh marker: the table may be half-appended
@@ -144,12 +155,7 @@ def _fresh_and_routable(spark: SparkSession, spec: dict) -> bool:
         return False
     if files_fingerprint(spec["source_paths"]) != spec["source_fp"]:
         return False
-    path = os.path.join(_warehouse_dir(spark), spec["table"].lower())
-    if not spark.catalog.tableExists(spec["table"]):
-        if not dir_is_complete(path):
-            return False
-        _register_bucketed(spark, spec["table"], spec, path)
-    return True
+    return star_layout._register(spark, spec)
 
 
 def _norm_input_files(df: DataFrame) -> set[str]:

@@ -1679,3 +1679,16 @@ def test_ephemeral_reused_across_consumers_computes_once(spark):
     # reuse path computes it exactly once.
     assert literal_count == 2000
     assert reused_count == 1000
+
+
+def test_default_driver_memory_fits_the_host():
+    """Without SPARK_DRIVER_MEMORY the driver heap is 24g capped at half
+    of physical memory, so the local-mode JVM (which also hosts every
+    executor thread) cannot outgrow the host."""
+    from dbt_analytics_spark.session import default_driver_memory
+
+    with open("/proc/meminfo") as f:
+        total_kb = next(
+            int(line.split()[1]) for line in f if line.startswith("MemTotal:")
+        )
+    assert default_driver_memory() == f"{min(24 << 10, total_kb // 2048)}m"

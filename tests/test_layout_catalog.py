@@ -307,3 +307,28 @@ metrics_aux: []
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "star_orders" in plan
     assert sorted(map(tuple, df.collect())) == raw_rows
+
+
+def test_route_source_reregisters_unbucketed_layout(spark, sf_copy, capsys):
+    """Cross-session routing of an UNBUCKETED layout: once the catalog
+    entry died with its session, route_source re-registers the lineitem
+    layout's persisted files as a plain table (no CLUSTERED BY — the
+    spec has no bucket column) and routes; `layout list` verifies the
+    same layout without crashing."""
+    from dbt_analytics_spark.cli import main
+
+    shutil.copy(os.path.join(SF, "lineitem.parquet"), sf_copy)
+    tbl = star_layout.ensure_lineitem_layout(spark, sf_copy)
+    d = star_layout._warehouse_path(spark, tbl)
+    # simulate a dead session: catalog entry gone, files persisted
+    shutil.copytree(d, d + ".keep")
+    spark.sql(f"DROP TABLE {tbl}")  # managed drop removes the files
+    shutil.move(d + ".keep", d)
+    assert not spark.catalog.tableExists(tbl)
+    lineitem = spark.read.parquet(os.path.join(sf_copy, "lineitem.parquet"))
+    routed = layout_catalog.route_source(spark, lineitem)
+    assert routed is not None and layout_catalog.last_route_used == tbl
+    assert routed.schema == lineitem.schema
+    assert _rows(routed) == _rows(lineitem)
+    assert main(["layout", "list"], spark=spark) == 0
+    assert f"{tbl}  covers=lineitem" in capsys.readouterr().out

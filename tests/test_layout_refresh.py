@@ -250,7 +250,8 @@ def test_custdist_refuses_dangling_orders_custkey(spark, sf_dirs):
     # the corrupt pair was dropped: routing cannot serve it (q13 falls
     # back to the raw LEFT-JOIN plan, which handles dangling keys)
     assert star_layout.maybe_custdist_rollup(spark, d) is None
-    base_tbl, hist_tbl, _ = star_layout._custdist_rollup_spec(spark, d)
+    spec = star_layout._spec_for(star_layout.CUSTDIST_ROLLUP, spark, d)
+    base_tbl, hist_tbl = spec["base_table"], spec["table"]
     assert not spark.catalog.tableExists(base_tbl)
     assert not spark.catalog.tableExists(hist_tbl)
     # the refresh path reports the same refusal, non-fatally

@@ -156,13 +156,13 @@ def test_route_respects_fact_size_gate(spark, sf_copy, monkeypatch):
 
 
 def test_spec_cache_invalidates_on_mid_session_schema_change(spark, sf_copy):
-    """_SPEC_STATIC caches the derived schema DDL per (appId, sf_dir,
-    n_buckets); if source files are rewritten with a CHANGED schema
+    """_spec_for caches the derived schema DDL per (appId, sf_dir,
+    table); if source files are rewritten with a CHANGED schema
     mid-session, a rebuild must write a sidecar carrying the FRESH
     schema, not the stale cached string (otherwise spec-equality gating
     forces one wasted rebuild in the next session)."""
-    specs_before = star_layout._star_specs(
-        spark, sf_copy, star_layout.N_BUCKETS
+    spec_before = star_layout._spec_for(
+        star_layout.STAR_ORDERS, spark, sf_copy, star_layout.N_BUCKETS
     )
     # rewrite orders with an extra column mid-session
     orders = spark.read.parquet(os.path.join(sf_copy, "orders.parquet"))
@@ -172,11 +172,11 @@ def test_spec_cache_invalidates_on_mid_session_schema_change(spark, sf_copy):
     os.remove(os.path.join(sf_copy, "orders.parquet"))
     os.rename(tmp_new, os.path.join(sf_copy, "orders.parquet"))
     _fresh_session_view()
-    specs_after = star_layout._star_specs(
-        spark, sf_copy, star_layout.N_BUCKETS
+    spec_after = star_layout._spec_for(
+        star_layout.STAR_ORDERS, spark, sf_copy, star_layout.N_BUCKETS
     )
-    assert "o_extra" not in specs_before[0][2]["schema"]
-    assert "o_extra" in specs_after[0][2]["schema"]
+    assert "o_extra" not in spec_before["schema"]
+    assert "o_extra" in spec_after["schema"]
     # and a rebuild writes the fresh schema into the sidecar
     spark.conf.set("spark.dbt_analytics.orphanHealMinAgeSeconds", "0")
     try:
@@ -332,7 +332,9 @@ def test_custdist_rollup_refresh_folds_orders_delta(spark, tmp_path):
     )
     refreshed = sorted(map(tuple, spark.table(tbl).collect()))
     spark.sql(f"DROP TABLE {tbl}")
-    base_tbl, _, _ = star_layout._custdist_rollup_spec(spark, d)
+    base_tbl = star_layout._spec_for(
+        star_layout.CUSTDIST_ROLLUP, spark, d
+    )["base_table"]
     spark.sql(f"DROP TABLE {base_tbl}")
     _fresh_session_view()
     star_layout.ensure_custdist_rollup(spark, d)
@@ -370,14 +372,93 @@ def test_monthly_rollup_routes_g1_and_matches_raw(spark, sf_copy):
     )
 
 
-def test_monthly_rollup_schema_literal_matches_frame(spark):
-    """_MONTHLY_SCHEMA is a literal (no per-call plan analysis — the
-    r15 j1b regression's lesson); pin it to the frame's true schema."""
-    o = spark.read.parquet(os.path.join(SF, "orders.parquet")).limit(0)
-    assert (
-        star_layout._schema_ddl(star_layout._monthly_rollup_frame(o))
-        == star_layout._MONTHLY_SCHEMA
+def _types(struct):
+    return [(f.name, f.dataType) for f in struct.fields]
+
+
+@pytest.mark.parametrize(
+    "rel", star_layout.RELATIONS, ids=lambda r: r.stem
+)
+def test_recorded_schema_matches_build_frame(spark, rel):
+    """Every sidecar's recorded schema DDL (derived once per source
+    listing, or a fixed literal) is the build frame's true schema — for
+    custdist, the base is the build frame and the histogram derives
+    from it."""
+    from pyspark.sql.types import StructType
+
+    from dbt_analytics_spark.sources.readers import load_testdata
+
+    spec = star_layout._spec_for(rel, spark, SF)
+    frame = rel.build(load_testdata(spark, SF))
+    if rel.fold == "custdist":
+        assert _types(StructType.fromDDL(spec["base_schema"])) == _types(
+            frame.schema
+        )
+        frame = star_layout._custdist_from_base(frame, 0)
+    assert _types(StructType.fromDDL(spec["schema"])) == _types(frame.schema)
+
+
+def _dir_backed_copy(tmp_path):
+    """Every source as a DIRECTORY of part files (append = add a file)."""
+    import uuid
+
+    d = str(tmp_path / f"sfs_{uuid.uuid4().hex[:8]}")
+    for t in TABLES:
+        os.makedirs(os.path.join(d, f"{t}.parquet"))
+        shutil.copy(
+            os.path.join(SF, f"{t}.parquet"),
+            os.path.join(d, f"{t}.parquet", "part-00000.parquet"),
+        )
+    return d
+
+
+@pytest.mark.parametrize(
+    "rel", star_layout.RELATIONS, ids=lambda r: r.stem
+)
+def test_stale_derived_relation_is_never_routed(spark, tmp_path, monkeypatch, rel):
+    """The one routing contract, for every derived relation: a fresh
+    relation routes (and reports itself in last_route_used); a second
+    route check re-derives no schema; after an append to its covered
+    source it is stale and NOT routed; a pending sidecar is NOT routed;
+    refresh makes it fresh and routable again."""
+    from dbt_analytics_spark.plans.fingerprint import read_sidecar, write_sidecar
+
+    d = _dir_backed_copy(tmp_path)
+    tbl = star_layout.ensure(rel, spark, d)
+    assert star_layout.route(rel, spark, d) == tbl
+    assert star_layout.last_route_used == tbl
+    derived = []
+    real_ddl = star_layout._schema_ddl
+    monkeypatch.setattr(
+        star_layout,
+        "_schema_ddl",
+        lambda df: derived.append(1) or real_ddl(df),
     )
+    assert star_layout.route(rel, spark, d) == tbl
+    assert derived == []  # no plan analysis on a repeated check
+
+    src = os.path.join(d, f"{rel.sources[0]}.parquet")
+    shutil.copy(
+        os.path.join(src, "part-00000.parquet"),
+        os.path.join(src, "part-00001-appended.parquet"),
+    )
+    _fresh_session_view()
+    assert star_layout.route(rel, spark, d) is None
+    assert star_layout.last_route_used is None
+
+    path = star_layout._warehouse_path(spark, tbl)
+    spec = star_layout._spec_for(rel, spark, d)
+    assert read_sidecar(path, star_layout.LAYOUT_SIDECAR) != spec
+    write_sidecar(
+        path, {**spec, "pending": True}, star_layout.LAYOUT_SIDECAR
+    )
+    assert star_layout.route(rel, spark, d) is None
+    assert star_layout.last_route_used is None
+
+    assert star_layout.refresh(rel, spark, d) == "rebuilt"
+    assert star_layout.route(rel, spark, d) == tbl
+    assert star_layout.last_route_used == tbl
+    assert star_layout.refresh(rel, spark, d) == "fresh"
 
 
 def test_monthly_rollup_stale_on_orders_change(spark, sf_copy):
