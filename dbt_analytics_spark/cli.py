@@ -1157,9 +1157,13 @@ def main(argv: list[str] | None = None, spark: "SparkSession | None" = None) -> 
                 return 0
             if args.action == "rollup":
                 # Aggregate awareness (plans/semantics.Rollup): build an
-                # engine-maintained pre-aggregation; subsequent `sl query`
-                # invocations in this session route to it automatically
-                # when the request re-aggregates exactly from it.
+                # engine-maintained pre-aggregation. A later `sl query`
+                # finds it from its warehouse sidecar (discover_rollups)
+                # and routes to it when the request re-aggregates exactly
+                # from it AND the model still resolves to the files it
+                # was built from: a `table` model compiled afresh in a
+                # new process reads its raw sources, so there the rollup
+                # is refused as stale.
                 if args.refresh:
                     # incremental refresh (append-only fast path; falls
                     # back to a rebuild when the source was rewritten or
@@ -1202,8 +1206,9 @@ def main(argv: list[str] | None = None, spark: "SparkSession | None" = None) -> 
                     for rel in sl.run_exports(name):
                         print(f"exported {name} -> {rel}")
                 return 0
-            # pick up rollups built by previous invocations (aggregate
-            # awareness routes automatically when derivable)
+            # pick up rollups built by earlier invocations from their
+            # warehouse sidecars; each routes only while fresh against
+            # the files the model resolves to in this process
             try:
                 sl.discover_rollups()
             except Exception:

@@ -991,9 +991,9 @@ def _prog_reconstruct(
         nat = np.zeros((bh, bw, 64), dtype=np.int64)
         nat[:, :, _ZIGZAG] = zz
         blocks = nat.reshape(bh, bw, 8, 8) * qtabs[tq]
-        spatial = np.einsum(
-            "ij,abjk,kl->abil", _DCT_C.T, blocks.astype(np.float64), _DCT_C
-        )
+        # the same stacked matmul as the baseline's per-block IDCT, not an
+        # einsum: a different summation order can flip a rounding
+        spatial = _DCT_C.T @ blocks.astype(np.float64) @ _DCT_C
         plane = spatial.transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
         if hs != hmax or vs != vmax:
             plane = np.repeat(
@@ -1290,7 +1290,9 @@ def encode_jpeg_progressive(
     def _blocks(plane: np.ndarray, q: np.ndarray) -> np.ndarray:
         bh, bw = plane.shape[0] // 8, plane.shape[1] // 8
         blk = plane.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3) - 128.0
-        coef = np.einsum("ij,abjk,kl->abil", _DCT_C, blk, _DCT_C.T)
+        # the baseline encoder's matmul, not an einsum: a different
+        # summation order can flip a quantizer rounding
+        coef = _DCT_C @ blk @ _DCT_C.T
         quant = np.round(coef / q).astype(np.int64)
         return quant.reshape(bh, bw, 64)[:, :, _ZIGZAG]
 

@@ -1,8 +1,9 @@
 """Relation-state fingerprints for derived-artifact staleness guards.
 
-Engine-maintained derived artifacts (aggregate-awareness rollups in
-plans/semantics.py, the bucketed star layout in plans/star_layout.py)
-trade one build scan for many accelerated reads — which is only sound
+Engine-maintained derived relations (plans/star_layout.py: the star
+family's layouts and rollups, and the semantic layer's aggregate-
+awareness rollups through the same core) trade one build scan for many
+accelerated reads — which is only sound
 while the SOURCE relation is the one the artifact was built from. dbt
 records the analogous contract as the node checksum in the manifest
 (reference: SP/dbt/contracts/graph/nodes.py checksum field, used by
@@ -54,9 +55,9 @@ def data_listing(df: DataFrame) -> list[str]:
     return parts
 
 
-def data_fingerprint(df: DataFrame) -> str:
-    """Digest of :func:`data_listing` — the per-query staleness stamp."""
-    return hashlib.md5("\n".join(data_listing(df)).encode()).hexdigest()
+def digest(listing: list[str]) -> str:
+    """The fingerprint of a listing (the ``source_fp`` sidecar field)."""
+    return hashlib.md5("\n".join(listing).encode()).hexdigest()
 
 
 def files_listing(paths: list[str]) -> list[str]:
@@ -91,16 +92,16 @@ def files_listing(paths: list[str]) -> list[str]:
 
 
 def files_fingerprint(paths: list[str]) -> str:
-    """Like :func:`data_fingerprint` but straight from filesystem paths —
+    """:func:`digest` straight from filesystem paths, not a DataFrame —
     no Spark plan analysis, pure os.stat, so a per-query staleness check
     costs microseconds (digest of :func:`files_listing`)."""
-    return hashlib.md5("\n".join(files_listing(paths)).encode()).hexdigest()
+    return digest(files_listing(paths))
 
 
 def defs_fingerprint(obj) -> str:
     """Digest of a JSON-serializable definition object (dimension /
     measure expressions, layout contract fields). Pairs with
-    :func:`data_fingerprint`: data catches source-content drift, defs
+    the source fingerprint: data catches source-content drift, defs
     catches definition drift (a YAML edit that changes what a stored
     partial MEANS without touching the source table)."""
     return hashlib.md5(
@@ -108,12 +109,13 @@ def defs_fingerprint(obj) -> str:
     ).hexdigest()
 
 
-def read_sidecar(path: str, name: str = "_dbt_artifact_spec.json") -> dict | None:
+def read_sidecar(path: str, name: str) -> dict | None:
     """Read a JSON sidecar spec from a table directory; None if absent
-    or unparseable. The sidecar is the DURABLE copy of an artifact's
-    spec: managed-table TBLPROPERTIES die with an in-memory session
-    catalog, but the files (and this sidecar beside them) persist in the
-    warehouse, so a later session can verify before re-registering."""
+    or unparseable. The sidecar is the DURABLE copy of a derived
+    relation's spec: a managed table's catalog entry dies with an
+    in-memory session catalog, but the files (and this sidecar beside
+    them) persist in the warehouse, so a later session can discover and
+    verify them before re-registering."""
     p = os.path.join(path, name)
     try:
         with open(p, encoding="utf-8") as fh:
@@ -122,9 +124,7 @@ def read_sidecar(path: str, name: str = "_dbt_artifact_spec.json") -> dict | Non
         return None
 
 
-def write_sidecar(
-    path: str, spec: dict, name: str = "_dbt_artifact_spec.json"
-) -> None:
+def write_sidecar(path: str, spec: dict, name: str) -> None:
     """Write the JSON sidecar spec into a table directory (atomic via
     rename, so a concurrent reader never sees a torn file). Local-fs
     I/O here; on a remote warehouse this becomes one object put."""

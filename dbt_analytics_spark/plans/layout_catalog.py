@@ -4,22 +4,23 @@ Round 13 proved the value of routing ad-hoc star joins to the
 engine-owned bucketed layout (6.4x -> 1.6-1.8x vs DuckDB at 960M rows,
 BENCH_SCANFLOOR_r13) — but the routing lived in three hardcoded registry
 functions that knew exactly one layout. This module generalizes it into
-an ENGINE RULE, the join-side analogue of the semantic layer's
-aggregate-awareness rollup discovery (plans/semantics.py
-discover_rollups): any layout table whose sidecar declares the
+an ENGINE RULE: any layout table whose sidecar declares the
 substitution contract is discovered from the warehouse and swapped in
 for the raw scan of the relation it covers — in USER-AUTHORED models
 (SQL-string or Python) resolved through the Project registry, not just
 in the engine's own queries.
 
-There is ONE derived-relation mechanism (plans/star_layout.py): every
-layout and rollup is a ``DerivedRelation`` spec with one
-ensure/route/refresh implementation and one sidecar format. This module
-is its second consumer — it reads the same sidecars from the warehouse
-instead of from a spec in hand, and re-registers a table whose catalog
-entry died with its session through the same verify-and-register step
-(``star_layout._register``: ``CLUSTERED BY`` only when the spec has a
-bucket column), so bucketed and plain layouts route alike.
+There is ONE derived-relation mechanism (plans/star_layout.py): the
+star family's ``DerivedRelation`` specs and the semantic layer's
+rollups (plans/semantics.py) all go through one ensure/route/refresh
+core over one sidecar format. This module reads the same sidecars from
+the warehouse instead of from a spec in hand — its scan
+(:func:`scan_sidecars`) is also how ``SemanticLayer.discover_rollups``
+finds rollups without the session catalog — and re-registers a table
+whose catalog entry died with its session through the same
+verify-and-register step (``star_layout._register``: ``CLUSTERED BY``
+only when the spec has a bucket column), so bucketed and plain layouts
+route alike.
 
 The substitution contract (written by ``star_layout.ensure`` for specs
 with ``substitutes=True``; fields in the ``_dbt_layout_spec.json``
@@ -72,17 +73,10 @@ from .star_layout import LAYOUT_SIDECAR
 #: None (observability + tests; mirrors star_layout.last_route_used).
 last_route_used: str | None = None
 
-#: Per-session discovery cache: warehouse dir -> (listing fingerprint,
-#: [(table, spec), ...]). The LISTING is cached; every spec's freshness
-#: fingerprint is re-verified per use (os.stat only).
-_DISCOVERY_CACHE: dict[str, tuple[str, list[tuple[str, dict]]]] = {}
-
-
-def _warehouse_dir(spark: SparkSession) -> str:
-    import re
-
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    return re.sub(r"^file:", "", wh)
+#: Per-session discovery cache: directory -> ({dir: sidecar mtime},
+#: [spec, ...]). The LISTING is cached; every spec's freshness is
+#: re-verified per use (os.stat only).
+_DISCOVERY_CACHE: dict[str, tuple[dict, list[dict]]] = {}
 
 
 def _expand_files(paths: list[str]) -> set[str]:
@@ -100,40 +94,46 @@ def _expand_files(paths: list[str]) -> set[str]:
     return out
 
 
-def discover_layouts(spark: SparkSession) -> list[tuple[str, dict]]:
-    """All substitution-capable layouts in the warehouse:
-    ``(table_name, spec)`` for every directory carrying a layout sidecar
-    that declares ``covers``. One os.listdir of the warehouse + one JSON
-    read per layout dir, cached per (warehouse, dir-listing) — adding or
-    rebuilding a layout invalidates the cache because the dir set or the
-    sidecar mtimes change."""
+def scan_sidecars(directory: str) -> list[dict]:
+    """Every layout sidecar in ``directory``'s table dirs — the one
+    discovery scan, shared with semantic rollups (plans/semantics.py):
+    one os.listdir + one JSON read per table dir, cached per (directory,
+    dir-listing) — adding or rebuilding a relation invalidates the cache
+    because the dir set or the sidecar mtimes change."""
     from .fingerprint import read_sidecar
 
-    wh = _warehouse_dir(spark)
     try:
-        entries = sorted(os.listdir(wh))
+        entries = sorted(os.listdir(directory))
     except OSError:
         return []
     # cache key: dir names + sidecar mtimes (a rebuild rewrites the
-    # sidecar; a new layout adds a dir)
-    stamp_parts = []
+    # sidecar; a new relation adds a dir)
+    stamp = {}
     for d in entries:
-        sc = os.path.join(wh, d, LAYOUT_SIDECAR)
         try:
-            stamp_parts.append(f"{d}|{os.stat(sc).st_mtime_ns}")
+            sc = os.path.join(directory, d, LAYOUT_SIDECAR)
+            stamp[d] = os.stat(sc).st_mtime_ns
         except OSError:
             continue
-    stamp = "\n".join(stamp_parts)
-    cached = _DISCOVERY_CACHE.get(wh)
+    cached = _DISCOVERY_CACHE.get(directory)
     if cached is not None and cached[0] == stamp:
         return cached[1]
-    found: list[tuple[str, dict]] = []
-    for d in entries:
-        spec = read_sidecar(os.path.join(wh, d), LAYOUT_SIDECAR)
-        if spec and spec.get("covers") and spec.get("source_columns"):
-            found.append((spec["table"], spec))
-    _DISCOVERY_CACHE[wh] = (stamp, found)
+    specs = [read_sidecar(os.path.join(directory, d), LAYOUT_SIDECAR)
+             for d in stamp]
+    found = [spec for spec in specs if spec]
+    _DISCOVERY_CACHE[directory] = (stamp, found)
     return found
+
+
+def discover_layouts(spark: SparkSession) -> list[tuple[str, dict]]:
+    """All substitution-capable layouts in the warehouse:
+    ``(table_name, spec)`` for every directory carrying a layout sidecar
+    that declares ``covers``."""
+    return [
+        (spec["table"], spec)
+        for spec in scan_sidecars(star_layout._warehouse_path(spark))
+        if spec.get("covers") and spec.get("source_columns")
+    ]
 
 
 def _fresh_and_routable(spark: SparkSession, spec: dict) -> bool:

@@ -367,11 +367,10 @@ class Rollup:
     measures: dict[str, str]  # measure name -> original agg kind
     grains: dict[str, str] = field(default_factory=dict)  # time dim -> grain
     #: staleness guard (plans/fingerprint.py): digest of the SOURCE
-    #: relation's file listing at build time. _route_rollup recomputes it
-    #: per routed query and falls back to the fact on mismatch, so a
-    #: rollup built before an incremental append / rebuild of the fact
-    #: can never silently serve stale aggregates. None = unverifiable
-    #: (legacy spec): never routed.
+    #: relation's file listing at build time (the sidecar's source_fp).
+    #: _route_rollup recomputes it per routed query and falls back to the
+    #: fact on mismatch, so a rollup built before an incremental append /
+    #: rebuild of the fact can never silently serve stale aggregates.
     fp_data: str | None = None
     #: digest of the dim/measure DEFINITIONS the partials were compiled
     #: from; a YAML edit that changes what a stored partial means makes
@@ -381,6 +380,9 @@ class Rollup:
     #: type (recorded at build), so the routed sum/count division casts
     #: to the exact same decimal scale.
     casts: dict[str, str] = field(default_factory=dict)
+    #: the layout sidecar contract it was built or discovered with
+    #: (plans/star_layout.py); a rollup without one is never routed
+    _spec: dict = field(default_factory=dict, repr=False, compare=False)
 
 
 #: Measure agg kinds whose partials re-aggregate EXACTLY from a coarser
@@ -402,11 +404,6 @@ _ROLLUP_REAGG = {
     "max": "max",
     "avg": "_reagg_avg",
 }
-
-#: Sidecar holding the source relation's file LISTING at build time —
-#: the append-only incremental refresh diffs it against the current
-#: listing (plans/fingerprint.data_listing).
-_ROLLUP_FILES_SIDECAR = "_dbt_rollup_files.json"
 
 #: grain -> the coarser grains derivable from buckets stored at it.
 #: ISO weeks do not nest in months/quarters/years-by-truncation, so week
@@ -973,19 +970,26 @@ class SemanticLayer:
         awareness answer to repeated metric traffic at 100 TB (the same
         trade the bucketed star layout makes for joins).
 
+        The rollup is one of the engine's derived relations: it is
+        written, sealed and (with ``reuse_existing``) reused or
+        re-registered from its files through the shared build core
+        (plans/star_layout.ensure_spec), gated on its layout sidecar
+        equalling this call's spec — same definitions, same source files.
+
         Partial-aggregate exactness: decimal sums re-sum exactly
         (addition is associative), counts re-sum, min/max re-min/max —
         the routed answer is bit-identical to the fact-grain answer, so
         routing never weakens the oracle gate."""
+        from functools import partial
+
+        from .star_layout import ensure_spec
+
         sem = self.models[model]
         df = self.project._resolve_for_adhoc(sem.model)
-        dim_names, grains, kinds, casts, rollup_df = self._rollup_partials(
-            sem, df, dims, model
-        )
-        return self._write_rollup(
-            name, model, sem, df, dims, dim_names, grains, kinds, casts,
-            rollup_df, reuse_existing,
-        )
+        spec, rollup_df = self._rollup_spec(name, model, sem, df, dims)
+        write = partial(self._save_rollup, rollup_df, spec["table"])
+        ensure_spec(self.project.spark, spec, write, reuse=reuse_existing)
+        return self._register_rollup(spec)
 
     def _rollup_partials(
         self, sem: SemanticModel, df: DataFrame, dims: list[str], model: str
@@ -1054,405 +1058,205 @@ class SemanticLayer:
             df.groupBy(*group_cols).agg(*aggs),
         )
 
-    def _rollup_table_dir(self, table: str) -> str:
-        import os as _os
-        import re as _re
+    def _rollup_spec(
+        self, name: str, model: str, sem: SemanticModel, df: DataFrame, dims
+    ) -> tuple[dict, DataFrame]:
+        """The rollup's derived-relation contract (its layout sidecar)
+        over ``df``'s CURRENT files, plus the partial frame it stores.
+        ``covers_paths`` is the backing table's directory only when the
+        model is a catalog TABLE — the one relation kind where a new data
+        file provably holds exactly the appended rows (a view's inputs
+        are upstream files; re-read raw they would skip its logic) — so
+        only a table's growth folds as a delta."""
+        from .fingerprint import data_listing, digest
+        from .star_layout import _schema_ddl, _warehouse_path
 
-        wh = _re.sub(
-            r"^file:",
-            "",
-            self.project.spark.conf.get("spark.sql.warehouse.dir"),
+        project = self.project
+        dim_names, grains, kinds, casts, rollup_df = self._rollup_partials(
+            sem, df, dims, model
         )
-        return _os.path.join(
-            wh,
-            table.lower().replace(".", ".db/", 1)
-            if "." in table
-            else table.lower(),
-        )
-
-    def _stamp_rollup(
-        self, table: str, spec: dict, listing: list[str]
-    ) -> None:
-        """Persist a rollup's metadata: TBLPROPERTIES (in-catalog
-        rediscovery), the spec sidecar (durable cross-session copy —
-        TBLPROPERTIES die with an in-memory catalog), and the source
-        file LISTING sidecar (what the append-only incremental refresh
-        diffs)."""
-        import json as _json
-
-        from .fingerprint import write_sidecar
-
-        spec_sql = _json.dumps(spec).replace("'", "''")
-        self.project.spark.sql(
-            f"ALTER TABLE {table} SET TBLPROPERTIES "
-            f"('dbt_analytics.rollup' = '{spec_sql}')"
-        )
-        try:
-            write_sidecar(self._rollup_table_dir(table), spec)
-            write_sidecar(
-                self._rollup_table_dir(table),
-                {"source_files": listing},
-                name=_ROLLUP_FILES_SIDECAR,
-            )
-        except OSError:
-            pass  # non-local warehouse: TBLPROPERTIES path still works
-
-    def _write_rollup(
-        self,
-        name: str,
-        model: str,
-        sem: SemanticModel,
-        df: DataFrame,
-        dims: list[str],
-        dim_names: list[str],
-        grains: dict[str, str],
-        kinds: dict[str, str],
-        casts: dict[str, str],
-        rollup_df: DataFrame,
-        reuse_existing: bool,
-    ) -> Rollup:
-        table = self.project.qualified(f"{name}__rollup")
-        spark = self.project.spark
-
-        from .fingerprint import (
-            data_fingerprint,
-            data_listing,
-            dir_is_complete,
-            read_sidecar,
-        )
-
-        # Staleness stamps, captured at build time: the source relation's
-        # file-listing digest and the dim/measure definition digest. Every
-        # later reuse / discover / route decision verifies BOTH — an
-        # incremental append to the fact or a YAML edit invalidates the
-        # rollup instead of silently serving stale partials.
         listing = data_listing(df)
+        source = project.qualified(sem.model)
+        is_table = not project._is_view_node(
+            sem.model
+        ) and project.spark.catalog.tableExists(source)
         spec = {
+            "table": project.qualified(f"{name}__rollup"),
+            "schema": _schema_ddl(rollup_df),
+            "source_listing": listing,
+            "source_fp": digest(listing),
+            "covers_paths": (
+                [_warehouse_path(project.spark, source)] if is_table else []
+            ),
             "name": name,
             "model": model,
             "dims": dim_names,
             "measures": kinds,
             "grains": grains,
             "casts": casts,
-            "fp_data": data_fingerprint(df),
             "fp_defs": self._rollup_defs_fp(sem, dim_names, kinds),
         }
+        return spec, rollup_df
 
-        _table_dir = lambda: self._rollup_table_dir(table)  # noqa: E731
+    def _save_rollup(self, df: DataFrame, table: str) -> None:
+        # through the engine's CTAS path so a previous session's
+        # orphaned location heals (age-gated) instead of failing with
+        # LOCATION_ALREADY_EXISTS
+        from .materialize import _save_as_table
 
-        build = True
-        if reuse_existing:
-            if spark.catalog.tableExists(table):
-                # Reuse only when the persisted spec (incl. both
-                # fingerprints) matches what THIS call would build —
-                # otherwise fall through and overwrite the stale table.
-                if self._read_rollup_spec(table) == spec:
-                    build = False
-            else:
-                # Same cross-session contract as the bucketed star layout
-                # (plans/star_layout.py): managed-table METADATA dies with
-                # the session's in-memory catalog but the FILES persist —
-                # re-register the existing files as an external table
-                # instead of rebuilding (and instead of leaving an orphan
-                # behind every session). Gated on (a) the _SUCCESS marker
-                # (a crashed partial write must never register as a
-                # complete table) and (b) the durable sidecar spec
-                # matching this call's spec exactly (a dims change under
-                # the same name must not read old files through a new
-                # schema as NULLs).
-                path = _table_dir()
-                if dir_is_complete(path) and read_sidecar(path) == spec:
-                    ddl = ", ".join(
-                        f"{f.name} {f.dataType.simpleString()}"
-                        for f in rollup_df.schema.fields
-                    )
-                    spark.sql(
-                        f"CREATE TABLE {table} ({ddl}) USING parquet "
-                        f"LOCATION '{path}'"
-                    )
-                    build = False
-        if build:
-            from .materialize import _save_as_table
+        _save_as_table(self.project, df.write.mode("overwrite"), table)
 
-            # through the engine's CTAS path so a previous session's
-            # orphaned location heals (age-gated) instead of failing
-            # with LOCATION_ALREADY_EXISTS
-            _save_as_table(
-                self.project, rollup_df.write.mode("overwrite"), table
-            )
-        # Persist the spec ON the table (TBLPROPERTIES + durable
-        # sidecars) so a FUTURE session's layer can rediscover, verify,
-        # and incrementally refresh it — the registry below is in-memory
-        # and dies with this layer.
-        self._stamp_rollup(table, spec, listing)
+    def _register_rollup(self, spec: dict) -> Rollup:
         rollup = Rollup(
-            name=name,
-            model=model,
-            dims=tuple(dim_names),
-            table=table,
-            measures=kinds,
-            grains=grains,
-            fp_data=spec["fp_data"],
+            name=spec["name"],
+            model=spec["model"],
+            dims=tuple(spec["dims"]),
+            table=spec["table"],
+            measures=dict(spec["measures"]),
+            grains=dict(spec["grains"]),
+            fp_data=spec["source_fp"],
             fp_defs=spec["fp_defs"],
-            casts=casts,
+            casts=dict(spec["casts"]),
+            _spec=spec,
         )
-        kept = [r for r in self.rollups.get(model, []) if r.name != name]
-        kept.append(rollup)
-        self.rollups[model] = kept
+        kept = [
+            r for r in self.rollups.get(rollup.model, [])
+            if r.name != rollup.name
+        ]
+        self.rollups[rollup.model] = kept + [rollup]
         return rollup
 
     def refresh_rollup(self, name: str, model: str) -> Rollup:
-        """Refresh rollup ``name`` against the CURRENT source state.
+        """Refresh rollup ``name`` against the CURRENT source state,
+        through the shared refresh core (plans/star_layout.refresh_spec).
 
         Fast path (append-only): when the semantic model's backing
-        relation is a catalog TABLE — the one relation kind where a new
-        data file provably contains exactly the appended rows, nothing
-        recomputed through view logic — and the build-time file listing
-        is an UNCHANGED subset of the current one, aggregate ONLY the
-        new files to partials and fold them into the stored rollup:
-        refresh cost scales with the DELTA, never the fact. That is the
-        100 TB answer to the staleness guard's "rebuild" remedy — an
+        relation is a catalog TABLE (``covers_paths``, see
+        :meth:`_rollup_spec`) and the build-time file listing is an
+        UNCHANGED subset of the current one, aggregate ONLY the new
+        files to partials and fold them into the stored rollup: refresh
+        cost scales with the DELTA, never the fact. That is the 100 TB
+        answer to the staleness guard's "rebuild" remedy — an
         hourly-append fact never pays a full re-aggregation.
 
         Everything else (source rewritten or shrunk, definition drift,
-        non-table relation, missing/changed old files, schema change,
-        no listing sidecar) falls back to a full rebuild through
-        :meth:`materialize_rollup`; an already-fresh rollup is a no-op.
-        ``self.last_refresh_mode`` records 'noop' | 'incremental' |
-        'rebuild'. Partial exactness is unchanged: sums/counts (and avg
-        sum+count pairs) re-sum, min/max re-min/max, so the refreshed
-        table equals a from-scratch build bit-for-bit."""
-        from .fingerprint import data_fingerprint, data_listing, read_sidecar
+        non-table relation, missing/changed old files, schema change, a
+        pending marker from a crashed fold) rebuilds; an already-fresh
+        rollup is a no-op. ``self.last_refresh_mode`` records 'noop' |
+        'incremental' | 'rebuild'. Partial exactness is unchanged:
+        sums/counts (and avg sum+count pairs) re-sum, min/max
+        re-min/max, so the refreshed table equals a from-scratch build
+        bit-for-bit."""
+        from .star_layout import Fold, refresh_spec
 
-        sem = self.models[model]
-        spark = self.project.spark
         rollup = next(
             (r for r in self.rollups.get(model, []) if r.name == name), None
         )
-        # reconstruct the original dims argument (dim or dim__grain)
-        dims_arg = (
-            [
-                f"{dn}__{rollup.grains[dn]}" if dn in rollup.grains else dn
-                for dn in rollup.dims
-            ]
-            if rollup is not None
-            else None
-        )
-
-        def _rebuild() -> Rollup:
-            self.last_refresh_mode = "rebuild"
-            return self.materialize_rollup(
-                name, model, dims_arg, reuse_existing=False
-            )
-
-        if rollup is None or dims_arg is None:
+        if rollup is None:
             raise KeyError(
                 f"rollup {name!r} on {model!r} is not registered — build "
                 "it with materialize_rollup() / discover_rollups() first"
             )
+        sem = self.models[model]
+        spark = self.project.spark
         df = self.project._resolve_for_adhoc(sem.model)
-        cur_listing = data_listing(df)
-        cur_fp = data_fingerprint(df)
-        try:
-            defs_ok = rollup.fp_defs == self._rollup_defs_fp(
-                sem, rollup.dims, rollup.measures
-            )
-        except KeyError:
-            defs_ok = False
-        if not defs_ok:
-            return _rebuild()
-        if rollup.fp_data == cur_fp:
-            self.last_refresh_mode = "noop"
-            return rollup
-        # append-only detection: the relation must be a catalog TABLE
-        # (not a view/ephemeral whose inputs are upstream files — re-
-        # reading those raw would skip the view's logic) and every
-        # build-time file must still be present UNCHANGED.
-        files_sc = read_sidecar(
-            self._rollup_table_dir(rollup.table), _ROLLUP_FILES_SIDECAR
-        )
-        old_listing = (files_sc or {}).get("source_files")
-        is_table = not self.project._is_view_node(
-            sem.model
-        ) and spark.catalog.tableExists(self.project.qualified(sem.model))
-        if (
-            not is_table
-            or not old_listing
-            or any(e.startswith("mem:") for e in old_listing)
-            or not set(old_listing) < set(cur_listing)
-        ):
-            return _rebuild()
-        delta_paths = [
-            e.split("|", 1)[0]
-            for e in sorted(set(cur_listing) - set(old_listing))
+        # the original dims argument (dim or dim__grain)
+        dims = [
+            f"{dn}__{rollup.grains[dn]}" if dn in rollup.grains else dn
+            for dn in rollup.dims
         ]
-        delta_df = spark.read.parquet(*delta_paths)
-        if delta_df.schema != df.schema:
-            return _rebuild()  # appended files under a changed schema
-        dim_names, grains, kinds, casts, delta_partials = (
-            self._rollup_partials(sem, delta_df, dims_arg, model)
-        )
-        if kinds != rollup.measures or casts != rollup.casts:
-            return _rebuild()
-        # fold: union the stored partials with the delta's and
-        # re-aggregate per kind — sums/counts/avg-pairs re-sum, min/max
-        # re-min/max; exactness identical to a from-scratch build
-        reaggs = []
-        for mn, kind in kinds.items():
-            if kind == "avg":
-                reaggs.append(F.sum(f"p_{mn}__sum").alias(f"p_{mn}__sum"))
-                reaggs.append(F.sum(f"p_{mn}__cnt").alias(f"p_{mn}__cnt"))
-            else:
-                fn = _AGGS[_ROLLUP_REAGG[kind]]
-                reaggs.append(fn(f"p_{mn}").alias(f"p_{mn}"))
-        merged = (
-            spark.table(rollup.table)
-            .unionByName(delta_partials)
-            .groupBy(*[f"d_{dn}" for dn in dim_names])
-            .agg(*reaggs)
-        )
-        from .materialize import _save_as_table
+        spec, _ = self._rollup_spec(name, model, sem, df, dims)
 
-        # two-step swap: Spark cannot overwrite a table it is reading,
-        # so stage the merged frame first (both frames are output-grain-
-        # sized — tiny next to the fact either way)
-        staging = f"{rollup.table}__refreshing"
-        _save_as_table(self.project, merged.write.mode("overwrite"), staging)
-        _save_as_table(
-            self.project,
-            spark.table(staging).write.mode("overwrite"),
-            rollup.table,
+        def derive(files: list[str]) -> DataFrame | None:
+            delta = spark.read.parquet(*files)
+            if delta.schema != df.schema:
+                return None  # appended files under a changed schema
+            return self._rollup_partials(sem, delta, dims, model)[4]
+
+        # re-fold rule: sums/counts/avg-pairs re-sum, min/max re-min/max
+        aggs = {}
+        for mn, kind in spec["measures"].items():
+            if kind == "avg":
+                aggs.update({f"p_{mn}__sum": "sum", f"p_{mn}__cnt": "sum"})
+            else:
+                aggs[f"p_{mn}"] = _ROLLUP_REAGG[kind]
+        fold = Fold(tuple(f"d_{dn}" for dn in spec["dims"]), aggs)
+        status = refresh_spec(spark, spec, fold, derive, self._save_rollup)
+        self.last_refresh_mode = {None: "rebuild", "fresh": "noop"}.get(
+            status, "incremental"
         )
-        spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        spec = {
-            "name": name,
-            "model": model,
-            "dims": list(rollup.dims),
-            "measures": kinds,
-            "grains": grains,
-            "casts": casts,
-            "fp_data": cur_fp,
-            "fp_defs": rollup.fp_defs,
-        }
-        self._stamp_rollup(rollup.table, spec, cur_listing)
-        fresh = Rollup(
-            name=name,
-            model=model,
-            dims=rollup.dims,
-            table=rollup.table,
-            measures=kinds,
-            grains=grains,
-            fp_data=cur_fp,
-            fp_defs=rollup.fp_defs,
-            casts=casts,
-        )
-        kept = [r for r in self.rollups.get(model, []) if r.name != name]
-        kept.append(fresh)
-        self.rollups[model] = kept
-        self.last_refresh_mode = "incremental"
-        return fresh
+        if status is None:
+            return self.materialize_rollup(name, model, dims)
+        return self._register_rollup(spec)
 
     def _rollup_defs_fp(
         self, sem: SemanticModel, dim_names, measure_kinds
-    ) -> str:
+    ) -> str | None:
         """Digest of the dimension/measure DEFINITIONS a rollup's
         partials were compiled from (exprs, types, grains, agg kinds).
-        Raises KeyError when a name no longer exists on the model —
-        callers treat that as definition drift."""
+        None when a name no longer exists on the model — definition
+        drift, equal to no stored digest."""
         from .fingerprint import defs_fingerprint
 
-        dims = {}
-        for dn in dim_names:
-            d = sem.dimensions[dn]
-            dims[dn] = [d.type, d.expr or dn, d.grain if d.type == "time" else ""]
-        meas = {}
-        for mn in measure_kinds:
-            ms = sem.measures[mn]
-            meas[mn] = [ms.agg, ms.expr or (mn if ms.agg != "count" else "1")]
+        dims, meas = {}, {}
+        try:
+            for dn in dim_names:
+                d = sem.dimensions[dn]
+                dims[dn] = [d.type, d.expr or dn, d.grain if d.type == "time" else ""]
+            for mn in measure_kinds:
+                ms = sem.measures[mn]
+                meas[mn] = [ms.agg, ms.expr or (mn if ms.agg != "count" else "1")]
+        except KeyError:
+            return None
         return defs_fingerprint({"dims": dims, "measures": meas})
 
-    def _read_rollup_spec(self, table: str) -> dict | None:
-        """The ``dbt_analytics.rollup`` TBLPROPERTIES spec of ``table``,
-        or None when absent/unparseable."""
-        import json as _json
-
-        try:
-            rows = self.project.spark.sql(
-                f"SHOW TBLPROPERTIES {table} ('dbt_analytics.rollup')"
-            ).collect()
-        except Exception:
-            return None
-        if not rows or "does not have property" in (rows[0][-1] or ""):
-            return None
-        try:
-            return _json.loads(rows[0]["value"])
-        except (ValueError, KeyError):
-            return None
-
     def discover_rollups(self) -> int:
-        """Re-register rollups built by PREVIOUS sessions: scan the
-        current database for ``*__rollup`` tables carrying the
-        ``dbt_analytics.rollup`` property and register every one whose
-        semantic model this layer knows AND whose definition fingerprint
-        still matches the current YAML (a rollup whose dim/measure exprs
-        drifted is skipped with a warning — its partials no longer mean
-        what the query would assume). Source-DATA freshness is verified
-        per query in _route_rollup, since the fact can change after
-        discovery. Returns the number registered. The CLI calls this
-        before ``sl query`` so ``sl rollup`` in one invocation
-        accelerates queries in every later one."""
+        """Register rollups built by EARLIER layers or sessions: read the
+        layout sidecars in the project database's warehouse directory
+        (plans/layout_catalog.scan_sidecars, the scan layout discovery
+        uses) — no session catalog needed, so a rollup whose catalog
+        entry died is found from its files — and register every one
+        whose semantic model this layer knows AND whose definition
+        fingerprint still matches the current YAML (a rollup whose
+        dim/measure exprs drifted is skipped with a warning — its
+        partials no longer mean what the query would assume).
+        Source-DATA freshness is verified per query in _route_rollup,
+        since the fact can change after discovery. Returns the number
+        registered.
+
+        The CLI calls this before ``sl query``. A later process then
+        finds a rollup built by ``sl rollup``, but routes to it only
+        while the model resolves to the files it was built from: a
+        ``table`` model compiled afresh in a new process (its table
+        not in that process's catalog) reads its raw sources instead and
+        the rollup is refused as stale."""
         import warnings
 
-        spark = self.project.spark
+        from .layout_catalog import scan_sidecars
+        from .star_layout import _warehouse_path
+
+        db = self.project.database
+        where = _warehouse_path(self.project.spark, f"{db}." if db else "")
         n = 0
-        for t in spark.catalog.listTables(
-            self.project.database or None
-        ):
-            if not t.name.endswith("__rollup"):
-                continue
-            full = (
-                f"{t.namespace[0]}.{t.name}"
-                if getattr(t, "namespace", None)
-                else t.name
-            )
-            spec = self._read_rollup_spec(full)
-            if spec is None:
-                continue
+        for spec in scan_sidecars(where):
             sem = self.models.get(spec.get("model"))
-            if sem is None:
-                continue
-            try:
-                cur_defs = self._rollup_defs_fp(
-                    sem, spec["dims"], spec["measures"]
-                )
-            except KeyError:
-                cur_defs = None  # a dim/measure no longer exists
-            if spec.get("fp_defs") != cur_defs or cur_defs is None:
+            if "fp_defs" not in spec or sem is None:
+                continue  # a star layout, or another layer's model
+            # a pending marker registers as its sealed spec, which then
+            # never matches the sidecar: not routed, refresh rebuilds
+            spec = {k: v for k, v in spec.items() if k != "pending"}
+            cur_defs = self._rollup_defs_fp(
+                sem, spec["dims"], spec["measures"]
+            )
+            if spec["fp_defs"] != cur_defs:
                 warnings.warn(
-                    f"rollup {spec.get('name')!r} ({full}): dimension/"
+                    f"rollup {spec['name']!r} ({spec['table']}): dimension/"
                     "measure definitions changed since it was built; "
                     "skipping — rebuild with sl rollup",
                     stacklevel=2,
                 )
                 continue
-            rollup = Rollup(
-                name=spec["name"],
-                model=spec["model"],
-                dims=tuple(spec["dims"]),
-                table=full,
-                measures=dict(spec["measures"]),
-                grains=dict(spec.get("grains", {})),
-                fp_data=spec.get("fp_data"),
-                fp_defs=spec.get("fp_defs"),
-                casts=dict(spec.get("casts", {})),
-            )
-            kept = [
-                r
-                for r in self.rollups.get(rollup.model, [])
-                if r.name != rollup.name
-            ]
-            kept.append(rollup)
-            self.rollups[rollup.model] = kept
+            self._register_rollup(spec)
             n += 1
         return n
 
@@ -1478,6 +1282,9 @@ class SemanticLayer:
         candidates = self.rollups.get(sem.name) or []
         if not candidates:
             return sem, df, None
+        from .fingerprint import data_listing, digest
+        from .star_layout import _fresh
+
         cur_fp: str | None = None  # source-data digest, computed lazily
         # shapes a partial-aggregate table cannot answer
         if conversions or where:
@@ -1498,6 +1305,7 @@ class SemanticLayer:
             for g in group_by or []:
                 parts = g.split("__")
                 dname = parts[0]
+                grain = parts[1] if len(parts) > 1 else ""
                 if dname == "metric_time":
                     tds = [
                         d.name
@@ -1505,9 +1313,6 @@ class SemanticLayer:
                         if d.type == "time"
                     ]
                     dname = tds[0] if tds else ""
-                    grain = parts[1] if len(parts) > 1 else ""
-                else:
-                    grain = parts[1] if len(parts) > 1 else ""
                 dim = sem.dimensions.get(dname)
                 if dim is None or dname not in rollup.dims:
                     ok = False  # entity-chain / unknown dims: fact only
@@ -1528,19 +1333,15 @@ class SemanticLayer:
             # incremental-append the fact -> query routes to stale
             # partials). Definitions first (cheap, in-memory), then the
             # source relation's file listing (metadata-only, one
-            # filesystem listing — no data scan).
-            try:
-                defs_ok = rollup.fp_defs == self._rollup_defs_fp(
-                    sem, rollup.dims, rollup.measures
-                )
-            except KeyError:
-                defs_ok = False
-            if not defs_ok:
+            # filesystem listing — no data scan), then star_layout's
+            # freshness check: with the listing unchanged the registered
+            # spec IS the current one, and its sidecar must equal it and
+            # its files register (a crashed or pending write does not).
+            cur_defs = self._rollup_defs_fp(sem, rollup.dims, rollup.measures)
+            if rollup.fp_defs != cur_defs or not rollup._spec:
                 continue
             if cur_fp is None:
-                from .fingerprint import data_fingerprint
-
-                cur_fp = data_fingerprint(df)
+                cur_fp = digest(data_listing(df))
             if rollup.fp_data != cur_fp:
                 import warnings
 
@@ -1551,6 +1352,8 @@ class SemanticLayer:
                     "sl rollup",
                     stacklevel=3,
                 )
+                continue
+            if not _fresh(self.project.spark, rollup._spec):
                 continue
             rollup_dims = set(rollup.dims)
             dims2 = {

@@ -41,7 +41,6 @@ delta fold, so a crash at any point degrades to a rebuild.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import re
 from dataclasses import dataclass
@@ -53,6 +52,7 @@ from pyspark.sql import functions as F
 
 from ..sources.readers import load_testdata
 from .fingerprint import (
+    digest,
     dir_is_complete,
     files_listing,
     read_sidecar,
@@ -129,9 +129,15 @@ def _schema_ddl(df: DataFrame) -> str:
     )
 
 
-def _warehouse_path(spark: SparkSession, table: str) -> str:
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    return os.path.join(re.sub(r"^file:", "", wh), table.lower())
+def _warehouse_path(spark: SparkSession, table: str = "") -> str:
+    """Managed location of ``table``: ``<wh>/<table>``, or
+    ``<wh>/<db>.db/<table>`` for ``db.table`` outside the default
+    database. ``""`` is the warehouse dir, ``"db."`` the database's."""
+    wh = re.sub(r"^file:", "", spark.conf.get("spark.sql.warehouse.dir"))
+    db, _, tbl = table.lower().rpartition(".")
+    if db and db != "default":
+        wh = os.path.join(wh, f"{db}.db")
+    return os.path.join(wh, tbl)
 
 
 # ---------------------------------------------------------------------------
@@ -489,7 +495,7 @@ def _spec_for(
     root = os.path.abspath(sf_dir)
     paths = [os.path.join(root, f"{s}.parquet") for s in rel.sources]
     listing = files_listing(paths)
-    fp = hashlib.md5("\n".join(listing).encode()).hexdigest()
+    fp = digest(listing)
     tag = _rel_tag(rel, sf_dir, n_buckets)
     table = f"{rel.stem}_{tag}_v{rel.version}"
     key = (spark.sparkContext.applicationId, root, table)
@@ -536,7 +542,8 @@ def _register(spark: SparkSession, spec: dict) -> bool:
     """Verify-and-register: True when ``spec``'s table(s) are usable in
     this session — already in the catalog, or complete persisted files
     (``_SUCCESS``) re-registered as an external table. A crashed partial
-    write (no ``_SUCCESS``) is never registered. ``CLUSTERED BY`` is
+    write (no ``_SUCCESS``) is never registered; a ``db.table`` spec
+    re-creates its database when needed. ``CLUSTERED BY`` is
     added only for bucketed specs (bucket ids ride in the file names, so
     the exchange-free join is preserved)."""
     tables = [(spec["table"], spec["schema"])]
@@ -555,11 +562,25 @@ def _register(spark: SparkSession, spec: dict) -> bool:
         path = _warehouse_path(spark, table)
         if not dir_is_complete(path):
             return False
+        db = table.rpartition(".")[0]
+        if db:  # a db.table rollup's files outlive its in-memory database
+            spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
         spark.sql(
             f"CREATE TABLE {table} ({schema}) USING parquet "
             f"{clustered}LOCATION '{path}'"
         )
     return True
+
+
+def _fresh(spark: SparkSession, spec: dict) -> bool:
+    """The one freshness check: the stored sidecar equals ``spec`` — the
+    contract over the CURRENT sources, so an absent, stale, pending or
+    different contract fails — and its table(s) register (a crashed
+    partial write does not)."""
+    path = _warehouse_path(spark, spec["table"])
+    return read_sidecar(path, LAYOUT_SIDECAR) == spec and _register(
+        spark, spec
+    )
 
 
 def route(
@@ -589,11 +610,8 @@ def route(
         spec = _spec_for(rel, spark, sf_dir, n_buckets)
     except Exception:
         return None  # source tables unreadable: nothing to route to
-    path = _warehouse_path(spark, spec["table"])
-    if read_sidecar(path, LAYOUT_SIDECAR) != spec:
-        return None  # absent, stale, pending, or a different contract
-    if not _register(spark, spec):
-        return None  # a crashed partial write
+    if not _fresh(spark, spec):
+        return None
     last_route_used = spec["table"]
     return spec["table"]
 
@@ -607,11 +625,11 @@ def _seal(spark: SparkSession, spec: dict) -> None:
 
 
 def _save(
-    spark: SparkSession, rel: DerivedRelation, spec: dict, df: DataFrame,
-    mode: str = "overwrite",
+    spark: SparkSession, rel: DerivedRelation, n_buckets: int,
+    df: DataFrame, table: str, mode: str = "overwrite",
 ) -> None:
-    """The one layout write: Z-ordered and/or bucketed per the spec,
-    rollups as a single file. Overwrites go through the engine's
+    """The one layout write: Z-ordered and/or bucketed per the relation,
+    grain rollups as a single file. Overwrites go through the engine's
     heal+retry CTAS path (a stale or partial leftover dir blocks
     saveAsTable with LOCATION_ALREADY_EXISTS and is removed by the
     age-gated orphan heal instead of failing forever)."""
@@ -620,17 +638,34 @@ def _save(
 
     if rel.zorder_cols:
         df = zorder_dataframe(df, list(rel.zorder_cols))
-    if rel.fold != "append":
+    if isinstance(rel.fold, Fold):
         df = df.coalesce(1)
     w = df.write
     if rel.bucket_col:
-        w = w.bucketBy(spec["n_buckets"], rel.bucket_col)
-        w = w.sortBy(rel.bucket_col)
+        w = w.bucketBy(n_buckets, rel.bucket_col).sortBy(rel.bucket_col)
     w = w.option("compression", LAYOUT_CODEC).mode(mode)
     if mode == "append":
-        w.saveAsTable(spec["table"])
+        w.saveAsTable(table)
     else:
-        _save_as_table(spark, w, spec["table"])
+        _save_as_table(spark, w, table)
+
+
+def ensure_spec(
+    spark: SparkSession,
+    spec: dict,
+    write: Callable[[], None],
+    reuse: bool = True,
+) -> None:
+    """The build core, over a spec dict in hand: reuse ``spec``'s table
+    when it is :func:`_fresh` (and ``reuse``), else drop it, ``write()``
+    it and seal the sidecar LAST — a crash before the seal leaves no
+    matching sidecar, so it degrades to a rebuild."""
+    if reuse and _fresh(spark, spec):
+        return
+    if spark.catalog.tableExists(spec["table"]):
+        spark.sql(f"DROP TABLE {spec['table']}")  # not this contract
+    write()
+    _seal(spark, spec)
 
 
 def ensure(
@@ -648,27 +683,27 @@ def ensure(
     constructed past the reuse check (the verified-reuse path is what
     j1b/w3b/q13b pay per query)."""
     spec = _spec_for(rel, spark, sf_dir, n_buckets)
-    tbl = spec["table"]
-    path = _warehouse_path(spark, tbl)
-    if read_sidecar(path, LAYOUT_SIDECAR) == spec and _register(spark, spec):
-        return tbl
-    if spark.catalog.tableExists(tbl):
-        spark.sql(f"DROP TABLE {tbl}")  # no longer this call's contract
+    save = partial(_save, spark, rel, n_buckets)
+    build = partial(_build, rel, spark, sf_dir, spec, save)
+    try:
+        ensure_spec(spark, spec, build)
+    except RollupParityRefused as e:
+        return f"refused ({e})"
+    return spec["table"]
+
+
+def _build(
+    rel: DerivedRelation, spark: SparkSession, sf_dir: str, spec: dict, save
+) -> None:
     t = load_testdata(spark, sf_dir)
     df = rel.build(t)
     if rel.fold == "custdist":
-        try:
-            _write_custdist_pair(
-                spark, spec, df, t["customer"].count(), t["customer"]
-            )
-        except RollupParityRefused as e:
-            return f"refused ({e})"
-        return tbl
-    _save(spark, rel, spec, df)
-    _seal(spark, spec)
+        customer = t["customer"]
+        _write_custdist_pair(spark, spec, df, customer.count(), customer, save)
+        return
+    save(df, spec["table"])
     if rel.row_parity:
-        _prove_row_parity(spark, tbl, t[rel.sources[0]])
-    return tbl
+        _prove_row_parity(spark, spec["table"], t[rel.sources[0]])
 
 
 def _prove_row_parity(spark: SparkSession, tbl: str, src: DataFrame) -> None:
@@ -700,18 +735,31 @@ class RollupParityRefused(ValueError):
     back to the (correct) raw plan."""
 
 
+def _swap(spark: SparkSession, table: str, df: DataFrame, save) -> None:
+    """Overwrite ``table`` with ``df`` — a plan that may read ``table``
+    itself — without collecting rows to the driver: stage the frame on
+    the executors, then swap it in."""
+    stg = f"{table}_stg"
+    spark.sql(f"DROP TABLE IF EXISTS {stg}")
+    save(df, stg)
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    save(spark.table(stg), table)
+    spark.sql(f"DROP TABLE {stg}")
+
+
 def _write_custdist_pair(
     spark: SparkSession,
     spec: dict,
     base_df: DataFrame,
     n_customers: int | None,
     customer: DataFrame,
+    save,
 ) -> None:
-    """Write base + derived histogram atomically enough for the routing
-    contract: the sidecar (on the HIST table, the routed one) is written
-    LAST, so a crash mid-pair leaves no matching sidecar and the router
-    refuses. ``n_customers`` None → recovered from the old histogram's
-    invariant total (refresh path, customer fingerprint unchanged).
+    """Write base + derived histogram; the caller seals the sidecar (on
+    the HIST table, the routed one) LAST, so a crash mid-pair leaves no
+    matching sidecar and the router refuses. ``n_customers`` None →
+    recovered from the old histogram's invariant total (refresh path,
+    customer fingerprint unchanged).
 
     Parity proof (the row-parity precedent): the base counts ALL orders
     per o_custkey, but raw q13 and the oracle attach counts via a
@@ -722,33 +770,14 @@ def _write_custdist_pair(
     bucket. Machine-check base-keys ⊆ customer-keys with one anti-join
     (customer-cardinality; builds/refreshes are one-time) and refuse
     the pair rather than ship a silently-divergent substitute."""
-    from .materialize import _save_as_table
-
     base_tbl, hist_tbl = spec["base_table"], spec["table"]
     if n_customers is None:
         n_customers = (
             spark.table(hist_tbl).agg(F.sum("custdist")).collect()[0][0]
         )
-    # stage the base first: the refresh merge plan READS the old base
-    # table, so severing goes through a staging table (customer-
-    # cardinality stays executor-side — never a driver collect)
-    stg = f"{base_tbl}_stg"
-    if spark.catalog.tableExists(stg):
-        spark.sql(f"DROP TABLE {stg}")
-
-    def write(df: DataFrame, tbl: str) -> None:
-        _save_as_table(
-            spark,
-            df.write.option("compression", LAYOUT_CODEC).mode("overwrite"),
-            tbl,
-        )
-
-    write(base_df, stg)
-    for t in (base_tbl, hist_tbl):
-        if spark.catalog.tableExists(t):
-            spark.sql(f"DROP TABLE {t}")
-    write(spark.table(stg), base_tbl)
-    spark.sql(f"DROP TABLE {stg}")
+    spark.sql(f"DROP TABLE IF EXISTS {hist_tbl}")
+    # the refresh merge plan READS the old base table
+    _swap(spark, base_tbl, base_df, save)
     dangling = (
         spark.table(base_tbl)
         .join(
@@ -766,19 +795,19 @@ def _write_custdist_pair(
             "orders references unknown customers); rollup refused"
         )
     hist = _custdist_from_base(spark.table(base_tbl), int(n_customers))
-    write(hist.coalesce(1), hist_tbl)
-    _seal(spark, spec)
+    save(hist.coalesce(1), hist_tbl)
 
 
 def _append_only_delta(old: dict | None, new: dict) -> list[str] | None:
     """The appended delta files when ``new``'s sources GREW from
-    ``old``'s by files under the COVERED relation only — else None
-    (caller falls back to a full rebuild). Append-only means: every old
-    listing entry present and unchanged in the new listing (same path,
-    size, mtime), and every NEW entry a well-formed file entry under the
-    covered relation's path (a grown nation/region in custmap's snowflake
-    changes derived rows everywhere — only a grown covered source is
-    delta-foldable). A pending marker from a crashed fold never folds."""
+    ``old``'s by files under ``covers_paths`` only — else None (caller
+    falls back to a full rebuild). Append-only means: every old listing
+    entry present and unchanged in the new listing (same path, size,
+    mtime), and every NEW entry a well-formed file entry under a covered
+    path (a grown nation/region in custmap's snowflake changes derived
+    rows everywhere — only a grown covered source is delta-foldable; an
+    empty ``covers_paths`` folds nothing). A pending marker from a
+    crashed fold never folds."""
     if old is None or old.get("pending"):
         return None
     static_keys = set(new) - {"source_fp", "source_listing"}
@@ -821,11 +850,60 @@ def _read_like_engine(spark: SparkSession, files: list[str]) -> DataFrame:
 
 
 def _merge(stored: DataFrame, delta: DataFrame, fold: Fold) -> DataFrame:
-    return (
+    """Stored and delta partials re-folded, under the stored schema (a
+    re-summed decimal would otherwise widen)."""
+    merged = (
         stored.unionByName(delta)
         .groupBy(*fold.key)
         .agg(*(getattr(F, fn)(c).alias(c) for c, fn in fold.aggs.items()))
     )
+    return merged.select(
+        *(F.col(f.name).cast(f.dataType) for f in stored.schema)
+    )
+
+
+def refresh_spec(
+    spark: SparkSession,
+    spec: dict,
+    fold: str | Fold | Callable[[DataFrame], None],
+    derive: Callable[[list[str]], DataFrame | None],
+    save,
+) -> str | None:
+    """The refresh core, over a spec dict in hand: ``"fresh"`` when
+    :func:`_fresh`; ``"refreshed (+N files)"`` when the sources grew
+    append-only (:func:`_append_only_delta`) and ``derive(files)`` turned
+    the delta files into rows to fold (None refuses); else None, and the
+    caller rebuilds. ``fold`` is ``"append"`` (add the rows as files), a
+    :class:`Fold` (merge with the stored partials, staged and swapped on
+    the executors) or a callable that writes the rows itself.
+
+    Crash safety: the sidecar is flipped to a PENDING marker before the
+    write and finalized after, so routing (exact spec match) never
+    serves a half-written table, and a crash degrades to a rebuild,
+    never to silent duplicates."""
+    if _fresh(spark, spec):
+        return "fresh"
+    tbl = spec["table"]
+    path = _warehouse_path(spark, tbl)
+    old = read_sidecar(path, LAYOUT_SIDECAR)
+    delta = _append_only_delta(old, spec)
+    if delta is None or not _register(spark, old):
+        return None
+    rows = derive(delta)
+    if rows is None:
+        return None
+    try:
+        write_sidecar(path, {**old, "pending": True}, LAYOUT_SIDECAR)
+        if isinstance(fold, Fold):
+            _swap(spark, tbl, _merge(spark.table(tbl), rows, fold), save)
+        elif fold == "append":
+            save(rows, tbl, "append")
+        else:
+            fold(rows)
+        write_sidecar(path, spec, LAYOUT_SIDECAR)
+    except OSError:
+        return None  # sidecar unwritable: rebuild
+    return f"refreshed (+{len(delta)} files)"
 
 
 def refresh(
@@ -834,25 +912,20 @@ def refresh(
     sf_dir: str,
     n_buckets: int = N_BUCKETS,
 ) -> str:
-    """Incremental refresh — the layout twin of the semantic layer's
-    ``refresh_rollup`` (plans/semantics.py): an APPEND-ONLY growth of
-    the covered source folds only the delta files instead of paying the
-    full rebuild (155.8 s at 240M rows, BENCH_SCANFLOOR_r13; the fold
-    scales with the delta). Returns ``fresh``, ``refreshed (+N files)``,
-    ``rebuilt`` or a custdist ``refused (...)``.
+    """Incremental refresh of ``rel`` (:func:`refresh_spec`; semantic
+    rollups share the same core): an APPEND-ONLY growth of the covered
+    source folds only the delta files instead of paying the full rebuild
+    (155.8 s at 240M rows, BENCH_SCANFLOOR_r13; the fold scales with the
+    delta). Returns ``fresh``, ``refreshed (+N files)``, ``rebuilt`` or
+    a custdist ``refused (...)``.
 
     The delta runs through the SAME derivation as a full build, then per
     fold rule: per-row layouts append it as extra files (bucket ids are
     hash-stable across jobs, so bucket joins stay exchange-free); grain
-    rollups merge delta partials with the stored rows and rewrite them
-    through the CTAS path; custdist folds its per-customer base and
-    re-derives the histogram. Anything else (rewritten files, grown
-    non-covered sources, contract drift, a pending marker) rebuilds.
-
-    Crash safety: the sidecar is flipped to a PENDING marker before the
-    write and finalized after, so routing (exact spec match) never
-    serves a half-written table, and a crash degrades to a rebuild,
-    never to silent duplicates. Each fold adds files; compact
+    rollups merge delta partials with the stored rows; custdist folds
+    its per-customer base and re-derives the histogram. Anything else
+    (rewritten files, grown non-covered sources, contract drift, a
+    pending marker) rebuilds. Each fold adds files; compact
     (operators/compaction.py) or rebuild on a schedule, the same
     discipline lakehouse OPTIMIZE applies."""
     from ..sources import readers
@@ -863,49 +936,30 @@ def refresh(
         (spark.sparkContext.applicationId, os.path.abspath(sf_dir)), None
     )
     spec = _spec_for(rel, spark, sf_dir, n_buckets)
-    tbl = spec["table"]
-    path = _warehouse_path(spark, tbl)
-    old = read_sidecar(path, LAYOUT_SIDECAR)
-    if old == spec:
-        ensure(rel, spark, sf_dir, n_buckets)  # re-register if needed
-        return "fresh"
-    delta = _append_only_delta(old, spec)
-    if delta is not None and _register(spark, old):
-        t = load_testdata(spark, sf_dir)
+    save = partial(_save, spark, rel, n_buckets)
+
+    def derive(delta: list[str]) -> DataFrame | None:
         src = _read_like_engine(spark, delta)
-        delta_df = rel.build({**t, rel.sources[0]: src})
-        pending = {**old, "pending": True}
-        done = f"refreshed (+{len(delta)} files)"
-        try:
-            if rel.fold == "append":
-                # delta row-parity (same contract as the build): a
-                # dangling FK in the delta would silently drop rows
-                if not rel.row_parity or delta_df.count() == src.count():
-                    write_sidecar(path, pending, LAYOUT_SIDECAR)
-                    _save(spark, rel, spec, delta_df, "append")
-                    write_sidecar(path, spec, LAYOUT_SIDECAR)
-                    return done
-            elif rel.fold == "custdist":
-                merged = _merge(
-                    spark.table(spec["base_table"]), delta_df, _PERCUST_FOLD
-                )
-                write_sidecar(path, pending, LAYOUT_SIDECAR)
-                _write_custdist_pair(spark, spec, merged, None, t["customer"])
-                return done
-            else:
-                # a few rows: collect to sever the plan from the table
-                # being rewritten
-                rows = _merge(spark.table(tbl), delta_df, rel.fold).collect()
-                schema = spark.table(tbl).schema
-                write_sidecar(path, pending, LAYOUT_SIDECAR)
-                spark.sql(f"DROP TABLE {tbl}")
-                _save(spark, rel, spec, spark.createDataFrame(rows, schema))
-                write_sidecar(path, spec, LAYOUT_SIDECAR)
-                return done
-        except RollupParityRefused as e:
-            return f"refused ({e})"
-        except OSError:
-            pass  # sidecar unwritable: fall through to rebuild
+        t = load_testdata(spark, sf_dir)
+        rows = rel.build({**t, rel.sources[0]: src})
+        # delta row-parity (same contract as the build): a dangling FK
+        # in the delta would silently drop rows
+        if rel.row_parity and rows.count() != src.count():
+            return None
+        return rows
+
+    def custdist(rows: DataFrame) -> None:
+        base = _merge(spark.table(spec["base_table"]), rows, _PERCUST_FOLD)
+        customer = load_testdata(spark, sf_dir)["customer"]
+        _write_custdist_pair(spark, spec, base, None, customer, save)
+
+    fold = custdist if rel.fold == "custdist" else rel.fold
+    try:
+        status = refresh_spec(spark, spec, fold, derive, save)
+    except RollupParityRefused as e:
+        return f"refused ({e})"
+    if status:
+        return status
     status = ensure(rel, spark, sf_dir, n_buckets)
     return status if status.startswith("refused") else "rebuilt"
 

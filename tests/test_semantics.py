@@ -2195,6 +2195,82 @@ def test_rollup_files_reuse_rejects_spec_mismatch(spark, fact_path):
         spark.conf.unset("spark.dbt_analytics.orphanHealMinAgeSeconds")
 
 
+def test_rollup_crashed_rebuild_falls_back_to_fact(
+    spark, fact_path, monkeypatch
+):
+    """A rebuild whose write dies after the overwrite dropped the table
+    leaves the in-memory registration pointing at nothing: queries must
+    answer from the fact instead of raising on the missing table, and
+    the next build routes again."""
+    from dbt_analytics_spark.plans import materialize
+
+    _, lay = _file_layer(spark, fact_path)
+    lay.materialize_rollup("rus", "txns", ["seg"])
+    real_save = materialize._save_as_table
+
+    def dying_save(project, writer, target):
+        spark.sql(f"DROP TABLE IF EXISTS {target}")
+        raise RuntimeError("rollup write died")
+
+    monkeypatch.setattr(materialize, "_save_as_table", dying_save)
+    with pytest.raises(RuntimeError, match="rollup write died"):
+        lay.materialize_rollup("rus", "txns", ["seg"])
+    monkeypatch.setattr(materialize, "_save_as_table", real_save)
+    rows = _rows(lay.query(["revenue"], group_by=["seg"]))
+    assert lay.last_rollup_used is None
+    assert rows == [("a", 30.0), ("b", 5.0)]
+    lay.materialize_rollup("rus", "txns", ["seg"])
+    assert _rows(lay.query(["revenue"], group_by=["seg"])) == rows
+    assert lay.last_rollup_used == "rus"
+
+
+def test_rollup_discovered_without_catalog_entry(spark, fact_path):
+    """Discovery reads the rollup's sidecar from the warehouse, so a
+    rollup whose catalog entry died with its session (complete files
+    left behind) is found, re-registered and routed."""
+    _orphan_rollup_files(spark, fact_path, drop_success=False)
+    _, lay2 = _file_layer(spark, fact_path)
+    assert lay2.discover_rollups() == 1
+    rows = _rows(lay2.query(["revenue"], group_by=["seg"]))
+    assert lay2.last_rollup_used == "rus"
+    assert rows == [("a", 30.0), ("b", 5.0)]
+
+
+def test_rollup_discovered_after_its_database_is_gone(spark, fact_path):
+    """A database-qualified rollup lives in ``<wh>/<db>.db``; when both
+    its catalog entry and its database died with the session, discovery
+    still finds it and routing re-registers it, database included."""
+    import shutil
+
+    db = "sem_lost_db"
+    p1 = Project(spark, name="sem_db1", database=db)
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+    p1.source_table("txns_model", spark.read.parquet(fact_path))
+    lay1 = SemanticLayer(p1)
+    lay1.load(DOC)
+    r = lay1.materialize_rollup("rus", "txns", ["seg"])
+    wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
+    tdir = os.path.join(wh, f"{db}.db", "rus__rollup")
+    keep = os.path.join(wh, "sem_lost_db_rus.keep")
+    shutil.copytree(tdir, keep)
+    spark.sql(f"DROP DATABASE {db} CASCADE")
+    os.makedirs(os.path.dirname(tdir))
+    shutil.move(keep, tdir)
+    try:
+        p2 = Project(spark, name="sem_db2", database=db)
+        p2.source_table("txns_model", spark.read.parquet(fact_path))
+        lay2 = SemanticLayer(p2)
+        lay2.load(DOC)
+        assert lay2.discover_rollups() == 1
+        rows = _rows(lay2.query(["revenue"], group_by=["seg"]))
+        assert lay2.last_rollup_used == "rus"
+        assert rows == [("a", 30.0), ("b", 5.0)]
+        assert spark.catalog.tableExists(r.table)
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
+        shutil.rmtree(os.path.dirname(tdir), ignore_errors=True)
+
+
 def test_rollup_avg_measure_routes_and_matches_fact(spark, fact_path):
     """avg decomposes into (sum, non-null count) partials re-divided at
     query time — the routed answer must be IDENTICAL to the fact-grain
@@ -2372,3 +2448,44 @@ def test_refresh_unknown_rollup_raises(table_layer):
     _, lay = table_layer
     with pytest.raises(KeyError, match="not registered"):
         lay.refresh_rollup("nope", "txns")
+
+
+def test_refresh_crashed_fold_falls_back_then_rebuilds(
+    table_layer, monkeypatch
+):
+    """A delta fold whose write dies after the sidecar was flipped to
+    its pending marker: queries answer from the fact, and the next
+    refresh rebuilds instead of folding onto the half-written state."""
+    from dbt_analytics_spark.plans import materialize
+    from dbt_analytics_spark.plans.fingerprint import read_sidecar
+    from dbt_analytics_spark.plans.star_layout import (
+        LAYOUT_SIDECAR,
+        _warehouse_path,
+    )
+
+    spark, lay = table_layer
+    lay.materialize_rollup("rfr", "txns", ["seg"])
+    _txn_df(spark, [(4, "b", 7.0, "2025-02-02")]).write.mode(
+        "append"
+    ).saveAsTable("txns_model")
+    real_save = materialize._save_as_table
+
+    def dying_save(project, writer, target):
+        raise RuntimeError("fold write died")
+
+    monkeypatch.setattr(materialize, "_save_as_table", dying_save)
+    with pytest.raises(RuntimeError, match="fold write died"):
+        lay.refresh_rollup("rfr", "txns")
+    monkeypatch.setattr(materialize, "_save_as_table", real_save)
+    sidecar = read_sidecar(
+        _warehouse_path(spark, "rfr__rollup"), LAYOUT_SIDECAR
+    )
+    assert sidecar["pending"]
+    with pytest.warns(UserWarning, match="stale"):
+        rows = _rows(lay.query(["revenue"], group_by=["seg"]))
+    assert lay.last_rollup_used is None
+    assert rows == [("a", 30.0), ("b", 12.0)]
+    lay.refresh_rollup("rfr", "txns")
+    assert lay.last_refresh_mode == "rebuild"
+    assert _rows(lay.query(["revenue"], group_by=["seg"])) == rows
+    assert lay.last_rollup_used == "rfr"
